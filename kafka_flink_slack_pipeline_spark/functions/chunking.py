@@ -67,16 +67,20 @@ def split_into_blocks(body: Column, max_len: int = MAX_BLOCK_TEXT) -> Column:
 def hyperlink_headings(body: Column) -> Column:
     """W3 — `<url|heading>` pairing with sequential URL-line consumption.
 
-    Fold over 0-based line indices; accumulator carries (out, skip).
-    F.get (not element_at) for the lookahead: returns NULL out of bounds
-    under ANSI mode instead of throwing.
+    Folds over (line, next line) pairs; the accumulator carries (out, skip).
+    The pairs come from one split of the body zipped with its own tail plus
+    a NULL, so the fold is linear in the body: looking lines up by index
+    inside the lambda re-evaluated the split on every line.
     """
     lines = F.split(body, "\n", -1)
     n = F.size(lines)
+    pairs = F.arrays_zip(
+        lines.alias("line"),
+        F.concat(F.slice(lines, 2, n), F.array(F.lit(None).cast("string"))).alias("nxt"),
+    )
 
-    def step(acc: Column, i: Column) -> Column:
-        line = F.get(lines, i)
-        nxt = F.get(lines, i + 1)
+    def step(acc: Column, p: Column) -> Column:
+        line, nxt = p["line"], p["nxt"]
         pair = (
             (line != "")
             & nxt.isNotNull()
@@ -98,15 +102,14 @@ def hyperlink_headings(body: Column) -> Column:
         )
 
     folded = F.aggregate(
-        F.sequence(F.lit(0), n - 1),
+        pairs,
         F.struct(
             F.array().cast("array<string>").alias("out"), F.lit(False).alias("skip")
         ),
         step,
         lambda acc: F.array_join(acc["out"], "\n"),
     )
-    # sequence(0, -1) would be descending for an empty line array; body=''
-    # still splits to [''], so n >= 1 always. Guard anyway:
+    # a NULL body has no line count (size NULL, or -1 without ANSI): ''
     return F.when(n >= 1, folded).otherwise(F.lit(""))
 
 

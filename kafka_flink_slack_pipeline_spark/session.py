@@ -13,6 +13,17 @@ Scale notes (100 TB / 1000-executor deployment):
     with hints in the operators so plans stay broadcast at any fact-table SF.
   - Arrow is on for the few pandas-UDF operators (the slow path; see
     operators/multimodal.py and functions/textclean.py P1).
+
+Python workers (local masters): `spark.python.daemon.module` is this
+package's `worker_daemon`. Before every task pyspark re-reads the whole
+directory of `pyspark.zip` once per cached zip importer (16 of them) on
+Python < 3.13, about 0.23 s of CPU per Python task; the daemon's workers
+re-read an archive only when it changed. That per-task tax is what made
+spreading the email streams over every core cost more CPU than it saved
+(see streaming/producer_pipeline.py). The package root goes on the
+workers' PYTHONPATH so the daemon module imports from any working
+directory. A cluster master keeps pyspark's own daemon: its executors
+need not have the package on their path before the first task.
 """
 
 from __future__ import annotations
@@ -20,6 +31,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -59,6 +72,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module", f"{__package__}.worker_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -19,8 +19,11 @@ transactional, so exactly-once is impossible at the protocol level):
     `spark.read.parquet(dlq_dir)`.
 
 Scale notes: posting happens executor-side via mapInPandas (no
-driver-side collect); `parallelism` bounds concurrent HTTP streams and the
-per-partition limiter enforces Slack's ~1 req/s webhook budget. At high
+driver-side collect); `parallelism` bounds concurrent HTTP streams. The
+rate budget (Slack's ~1 req/s webhook limit by default) is shared by the
+partitions: each posts at most every `parallelism / rate` seconds, and
+partition k starts k / rate seconds into that interval, so together they
+post about `rate` requests per second. At high
 volume the right knob is fewer, larger Block Kit payloads (E1 chunking
 already packs to the 2,900-char ceiling).
 """
@@ -32,6 +35,7 @@ import time
 from collections.abc import Callable, Iterator
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -101,15 +105,16 @@ class SlackWebhookSink:
 
         url = self.webhook_url
         transport = self.transport
-        min_interval = (
-            1.0 / self.rate_limit_per_sec if self.rate_limit_per_sec else 0.0
-        )
+        parallelism = self.parallelism
+        rate = self.rate_limit_per_sec
+        min_interval = parallelism / rate if rate else 0.0
         retries = self.max_retries
 
         def post_partition(
             batches: Iterator[pd.DataFrame],
         ) -> Iterator[pd.DataFrame]:
-            last = 0.0
+            offset = TaskContext.get().partitionId() % parallelism / rate if rate else 0.0
+            last = time.monotonic() - min_interval + offset
             for pdf in batches:
                 errs = []
                 for key, payload in zip(pdf["idempotency_key"], pdf["payload"]):
@@ -132,7 +137,7 @@ class SlackWebhookSink:
 
         result = (
             batch_df.select("idempotency_key", "payload")
-            .repartition(self.parallelism)
+            .repartition(parallelism)
             .mapInPandas(
                 post_partition,
                 "idempotency_key string, payload string, error string",

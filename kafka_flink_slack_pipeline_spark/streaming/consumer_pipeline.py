@@ -66,7 +66,10 @@ def run_consumer_stream(
     serde: str = "json",
     trigger: dict | None = None,
 ) -> StreamingQuery:
-    out = consumer_transform(envelope_stream, serde)
+    # one envelope file is one input task: spread the batch over every core
+    # (see producer_pipeline.py)
+    sc = envelope_stream.sparkSession.sparkContext
+    out = consumer_transform(envelope_stream.repartition(sc.defaultParallelism), serde)
     return sink.attach(
         out, checkpoint_dir, trigger or {"availableNow": True}
     )

@@ -8,6 +8,13 @@ Mirrors `Producer/kafkaProducer.js` end to end:
 The transform is a pure DataFrame→DataFrame function so it runs identically
 on a batch frame (tests, backfills) and a streaming frame — Structured
 Streaming's core design win over the reference's callback pipeline.
+
+The stream heads (here and in consumer_pipeline.py) repartition each
+micro-batch to `defaultParallelism` before the row work. A landed file or
+an envelope file is one input task, so without the spread one core did a
+whole batch's cleaning, serde and chunking. The spread adds Python tasks,
+which pays only because the session's worker daemon (worker_daemon.py)
+removed their fixed per-task CPU cost.
 """
 
 from __future__ import annotations
@@ -54,7 +61,8 @@ def run_producer_stream(
 ) -> StreamingQuery:
     """Drive the transform into a parquet staging sink (broker-free runs;
     swap for sinks.kafka.write_stream_to_kafka in production)."""
-    out = producer_transform(raw_stream, serde)
+    sc = raw_stream.sparkSession.sparkContext
+    out = producer_transform(raw_stream.repartition(sc.defaultParallelism), serde)
     writer = (
         out.writeStream.format("parquet")
         .option("path", output_dir)

@@ -104,16 +104,20 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
 def _env_width(var: str) -> int:
     """Parse a width/fan env override. 0 or unset means "use the
     default" (documented convention — widths are never legitimately 0);
-    a non-integer value fails loudly naming the variable instead of
-    surfacing as a bare ValueError from deep inside a plan build."""
+    a non-integer or negative value fails loudly naming the variable
+    instead of surfacing as a bare ValueError from deep inside a plan
+    build."""
     raw = os.environ.get(var, "0")
     try:
-        return int(raw)
+        width = int(raw)
+        if width < 0:
+            raise ValueError
     except ValueError:
         raise ValueError(
-            f"${var} must be an integer (got {raw!r}); "
+            f"${var} must be a non-negative integer (got {raw!r}); "
             "0 or unset selects the built-in default"
         ) from None
+    return width
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

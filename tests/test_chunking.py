@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import re
 
 from pyspark.sql import functions as F
 
@@ -72,6 +73,44 @@ def test_hyperlink_no_pair_cases(spark):
 def test_hyperlink_chained_pairs(spark):
     out = _hyper(spark, "A\nhttps://1.co\nB\nhttps://2.co")
     assert out == "<https://1.co|A>\n<https://2.co|B>"
+
+
+def _js_hyperlink_headings(text: str | None) -> str:
+    """Python port of hyperlinkHeadings (Consumer/kafkaConsumer.js:94-115);
+    a NULL body reads as ''."""
+    lines = (text or "").split("\n")
+    out, i = [], 0
+    while i < len(lines):
+        line = lines[i]
+        nxt = lines[i + 1] if i + 1 < len(lines) else None
+        if line and nxt and re.fullmatch(r"https?://\S+", nxt) and len(line) < 300:
+            out.append(f"<{nxt}|{line}>")
+            i += 1  # the URL line is consumed
+        else:
+            out.append(line)
+        i += 1
+    return "\n".join(out)
+
+
+def test_hyperlink_matches_js_reference(spark):
+    bodies = [
+        None,
+        "",
+        "single line",
+        "https://only.url",
+        "intro\nHeading\nhttps://x.co/last",  # URL as the last line
+        "Heading\nhttps://1.co\nhttps://2.co\ntail",  # consecutive URL lines
+        "https://1.co\nhttps://2.co",  # a URL heading pairs with the next URL
+        f"{'h' * 299}\nhttps://x.co/299",  # longest heading that pairs
+        f"{'h' * 300}\nhttps://x.co/300",  # too long to pair
+        "\n\nH\nhttps://x.co\n\n",
+    ]
+    df = spark.createDataFrame([(i, b) for i, b in enumerate(bodies)], "i int, body string")
+    got = {
+        r.i: r.h
+        for r in df.select("i", C.hyperlink_headings(F.col("body")).alias("h")).collect()
+    }
+    assert [got[i] for i in range(len(bodies))] == [_js_hyperlink_headings(b) for b in bodies]
 
 
 # ---- E3/D5 Block Kit ------------------------------------------------------

@@ -7,10 +7,16 @@ mismatch would silently prune the wrong partitions)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from kafka_flink_slack_pipeline_spark import tables
 from kafka_flink_slack_pipeline_spark.streaming import retrieval_index as ri
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_spread_width_env_is_read(spark, monkeypatch):
@@ -29,6 +35,12 @@ def test_env_width_rejects_junk_loudly(monkeypatch):
         tables._env_width("SPARK_GRAFT_SPREAD_WIDTH")
 
 
+def test_env_width_rejects_negative(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_WIDTH", "-4")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SPREAD_WIDTH.*non-negative"):
+        tables._env_width("SPARK_GRAFT_SPREAD_WIDTH")
+
+
 def test_media_width_env_is_read(spark, sf_dir, monkeypatch):
     from kafka_flink_slack_pipeline_spark.operators.multimodal import (
         _spread_small_scan,
@@ -41,9 +53,21 @@ def test_media_width_env_is_read(spark, sf_dir, monkeypatch):
 
 
 def test_prefix_envs_are_read():
-    # module constants resolve through the shared parser with 0=default
-    assert ri._TERM_PREFIXES == (ri._env_int("SPARK_GRAFT_TERM_PREFIXES") or 16)
-    assert ri._DOC_PREFIXES == (ri._env_int("SPARK_GRAFT_DOC_PREFIXES") or 8)
+    # the moduli are fixed at import: read them in a fresh interpreter
+    script = (
+        "from kafka_flink_slack_pipeline_spark.streaming import retrieval_index as ri;"
+        "print(ri._TERM_PREFIXES, ri._DOC_PREFIXES)"
+    )
+    names = ("SPARK_GRAFT_TERM_PREFIXES", "SPARK_GRAFT_DOC_PREFIXES")
+    base = {k: v for k, v in os.environ.items() if k not in names}
+    # set, 0 = default, unset = default
+    for values, expected in [(("5", "3"), (5, 3)), (("0", "0"), (16, 8)), ((), (16, 8))]:
+        env = dict(base, **dict(zip(names, values)))
+        out = subprocess.run(
+            [sys.executable, "-c", script],
+            env=env, cwd=REPO, capture_output=True, text=True, check=True,
+        ).stdout.split()
+        assert tuple(map(int, out)) == expected
 
 
 def test_layout_manifest_roundtrip(tmp_path):

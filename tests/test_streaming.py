@@ -213,6 +213,37 @@ def test_sink_epoch_idempotency(spark, tmp_path):
     assert len(read_posts(record_dir)) == 2
 
 
+def test_sink_rate_limit_is_shared_by_partitions(spark, tmp_path):
+    """The rate budget holds for the sink as a whole: 20 posts at 20 req/s
+    over 4 partitions take 19 intervals of 50 ms (~0.95 s, less the skew
+    of the task starts). A clock of 1/rate per partition posts them in
+    ~0.2 s."""
+    import os as _os
+    import time as _time
+
+    record_dir = str(tmp_path / "stamps")
+    _os.makedirs(record_dir)
+
+    def transport(url, payload, key):
+        with open(_os.path.join(record_dir, key), "w") as f:
+            f.write(repr(_time.time()))
+
+    df = spark.createDataFrame(
+        [(f"k{i}", '{"blocks":[]}') for i in range(20)],
+        "idempotency_key string, payload string",
+    )
+    SlackWebhookSink(
+        "https://hooks.test/T000", transport=transport,
+        rate_limit_per_sec=20, parallelism=4,
+    )(df, epoch_id=0)
+    stamps = []
+    for fn in _os.listdir(record_dir):
+        with open(_os.path.join(record_dir, fn)) as f:
+            stamps.append(float(f.read()))
+    assert len(stamps) == 20
+    assert max(stamps) - min(stamps) >= 0.9
+
+
 # ---------------------------------------------------------------------------
 SLACK_EVENTS = [
     Row(event_id=1, type="app_mention", channel="C1", channel_type="channel",
