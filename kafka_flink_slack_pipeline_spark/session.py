@@ -20,7 +20,7 @@ directory of `pyspark.zip` once per cached zip importer (16 of them) on
 Python < 3.13, about 0.23 s of CPU per Python task; the daemon's workers
 re-read an archive only when it changed. That per-task tax is what made
 spreading the email streams over every core cost more CPU than it saved
-(see streaming/producer_pipeline.py). The package root goes on the
+(see streaming/microbatch.py). The package root goes on the
 workers' PYTHONPATH so the daemon module imports from any working
 directory. A cluster master keeps pyspark's own daemon: its executors
 need not have the package on their path before the first task.

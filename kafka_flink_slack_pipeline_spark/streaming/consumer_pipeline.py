@@ -23,6 +23,7 @@ from ..functions.chunking import (
     split_into_blocks,
 )
 from ..sinks.slack import SlackWebhookSink
+from .microbatch import spread
 
 
 def consumer_transform(envelope: DataFrame, serde: str = "json") -> DataFrame:
@@ -66,10 +67,13 @@ def run_consumer_stream(
     serde: str = "json",
     trigger: dict | None = None,
 ) -> StreamingQuery:
-    # one envelope file is one input task: spread the batch over every core
-    # (see producer_pipeline.py)
-    sc = envelope_stream.sparkSession.sparkContext
-    out = consumer_transform(envelope_stream.repartition(sc.defaultParallelism), serde)
-    return sink.attach(
-        out, checkpoint_dir, trigger or {"availableNow": True}
+    """Post each micro-batch through `sink`, after spreading it over as
+    many tasks as its size pays for (microbatch.py)."""
+
+    def deliver(batch: DataFrame, epoch_id: int) -> None:
+        sink(consumer_transform(spread(batch), serde), epoch_id)
+
+    writer = envelope_stream.writeStream.foreachBatch(deliver).option(
+        "checkpointLocation", checkpoint_dir
     )
+    return writer.trigger(**(trigger or {"availableNow": True})).start()

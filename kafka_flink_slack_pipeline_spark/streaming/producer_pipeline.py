@@ -9,12 +9,9 @@ The transform is a pure DataFrame→DataFrame function so it runs identically
 on a batch frame (tests, backfills) and a streaming frame — Structured
 Streaming's core design win over the reference's callback pipeline.
 
-The stream heads (here and in consumer_pipeline.py) repartition each
-micro-batch to `defaultParallelism` before the row work. A landed file or
-an envelope file is one input task, so without the spread one core did a
-whole batch's cleaning, serde and chunking. The spread adds Python tasks,
-which pays only because the session's worker daemon (worker_daemon.py)
-removed their fixed per-task CPU cost.
+Each micro-batch is spread over as many tasks as its size pays for before
+the row work (microbatch.py). The size is known per batch only inside
+foreachBatch, so the transform runs there.
 """
 
 from __future__ import annotations
@@ -27,6 +24,7 @@ from ..functions.html_text import maybe_html_to_text
 from ..functions.serde import quoted_printable_decode
 from ..functions.textclean import clean_body, format_subject
 from ..sinks.kafka import email_kafka_sink_frame
+from .microbatch import spread, stage_parquet
 
 # the reference's micro-batch period (kafkaProducer.js:232)
 DEFAULT_TRIGGER = {"processingTime": "10 minutes"}
@@ -59,14 +57,16 @@ def run_producer_stream(
     serde: str = "json",
     trigger: dict | None = None,
 ) -> StreamingQuery:
-    """Drive the transform into a parquet staging sink (broker-free runs;
-    swap for sinks.kafka.write_stream_to_kafka in production)."""
-    sc = raw_stream.sparkSession.sparkContext
-    out = producer_transform(raw_stream.repartition(sc.defaultParallelism), serde)
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
+    """Drive the transform into a parquet staging directory (broker-free
+    runs; swap for sinks.kafka.write_stream_to_kafka in production). Each
+    micro-batch lands as `epoch-<id>-*.parquet` files, once even if the
+    batch is replayed (microbatch.stage_parquet)."""
+
+    def stage(batch: DataFrame, epoch_id: int) -> None:
+        stage_parquet(producer_transform(spread(batch), serde), output_dir, epoch_id)
+
+    writer = raw_stream.writeStream.foreachBatch(stage).option(
+        "checkpointLocation", checkpoint_dir
     )
     writer = writer.trigger(**(trigger or {"availableNow": True}))
     return writer.start()
