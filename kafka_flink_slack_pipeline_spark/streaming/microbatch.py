@@ -27,7 +27,12 @@ BYTES_PER_TASK = 128 * 1024
 
 def input_bytes(batch: DataFrame) -> int | None:
     """Spark's size estimate of a foreachBatch micro-batch, or None when
-    Spark has none (it then reports spark.sql.defaultSizeInBytes)."""
+    Spark has none (it then reports spark.sql.defaultSizeInBytes).
+
+    PySpark has no public call for plan statistics, so this reads them
+    from the JVM plan. Inside foreachBatch the batch is a LogicalRDD that
+    keeps the estimate of the streaming plan it came from
+    (tests/test_microbatch.py checks that it still does)."""
     size = batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     unknown = batch.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
     return None if size >= unknown else int(size)
@@ -64,6 +69,6 @@ def stage_parquet(frame: DataFrame, output_dir: str, epoch_id: int) -> None:
             fs.delete(status.getPath(), False)
     for status in fs.listStatus(Path(staging)):
         name = status.getPath().getName()
-        if name.endswith(".parquet"):
-            fs.rename(status.getPath(), Path(out, prefix + name))
+        if name.endswith(".parquet") and not fs.rename(status.getPath(), Path(out, prefix + name)):
+            raise OSError(f"could not move {status.getPath()} into {output_dir}")
     fs.delete(Path(staging), True)
